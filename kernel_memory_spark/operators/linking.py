@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from kernel_memory_spark.functions.minhash import band_keys, jaccard, minhash_signature
 from kernel_memory_spark.functions.vectors import cosine, hash_embed
+from kernel_memory_spark.sources.tables import concurrent_commits
 
 JACCARD_THRESHOLD = 0.5
 COSINE_THRESHOLD = 0.6
@@ -190,13 +191,11 @@ def link_entities(
 # pairs hit the verification UDF (scores are deterministic in (a, b)).
 # ---------------------------------------------------------------------------
 
-LINK_STATE_BUCKETS = 64
-
-
 def refresh_links_incremental(
     spark,
     catalog,
     mentions: DataFrame,
+    n_buckets: int,
     jaccard_threshold: float = JACCARD_THRESHOLD,
     cosine_threshold: float = COSINE_THRESHOLD,
     bucket_cap: int = BAND_BUCKET_CAP,
@@ -207,7 +206,12 @@ def refresh_links_incremental(
     link_entities(all mentions) for append-only corpora (asserted by
     tests/test_streaming_ingest.py). Surfaces that disappear from the
     corpus (re-upload shrinking a document) are NOT withdrawn from the
-    state; run the full refresh for that case."""
+    state; run the full refresh for that case.
+
+    The four state tables are hash-bucketed into `n_buckets` (the stream
+    tables' bucket count); state written under another count is migrated
+    by merge_bucketed's one-time layout rewrite. Merges into different
+    state tables run concurrently with each other and with the chain."""
     sfc = f"{prefix}_surfaces"
     mem = f"{prefix}_band_members"
     prs = f"{prefix}_band_pairs"
@@ -225,67 +229,72 @@ def refresh_links_incremental(
             spark, catalog, jaccard_threshold, cosine_threshold, prefix
         )
 
-    # 1) sign ONLY the new surfaces (the Arrow UDF is O(new))
-    sigs = surface_signatures(new).localCheckpoint()
-    catalog.merge_bucketed(
-        spark, sfc, sigs.select("norm"), ["norm"], "norm",
-        n_buckets=LINK_STATE_BUCKETS,
-    )
-    new_members = sigs.select(F.explode("bands").alias("band"), "norm")
-    catalog.merge_bucketed(
-        spark, mem, new_members, ["band", "norm"], "band",
-        n_buckets=LINK_STATE_BUCKETS,
-    )
-
-    # 2) recompute candidate pairs for exactly the bands a new surface
-    # touched, from CURRENT membership: a bucket-pruned read (band hashes
-    # to its bucket) + the same cap as the batch path
-    touched = new_members.select("band").distinct().localCheckpoint()
-    wanted = [
-        r[0] for r in touched.select(
-            catalog._bucket_expr("band", LINK_STATE_BUCKETS).alias("b")
-        ).distinct().collect()
-    ]
-    members = catalog.read_buckets(spark, mem, wanted).join(
-        touched, "band", "left_semi"
-    ).localCheckpoint()  # feeds the cap agg and both self-join sides
-    hot = (
-        members.groupBy("band").agg(F.count("*").alias("n"))
-        .filter(F.col("n") > bucket_cap).select("band")
-    )
-    cool = members.join(F.broadcast(hot), "band", "left_anti")
-    l, r = cool.alias("l"), cool.alias("r")
-    pairs = (
-        l.join(r, F.col("l.band") == F.col("r.band"))
-        .filter(F.col("l.norm") < F.col("r.norm"))
-        .select(
-            F.col("l.band").alias("band"),
-            F.col("l.norm").alias("a"), F.col("r.norm").alias("b"),
+    with concurrent_commits(spark, 4) as submit:
+        # 1) sign ONLY the new surfaces (the Arrow UDF is O(new))
+        sigs = surface_signatures(new).localCheckpoint()
+        submit(
+            catalog.merge_bucketed, spark, sfc, sigs.select("norm"),
+            ["norm"], "norm", n_buckets=n_buckets,
         )
-    ).localCheckpoint()  # feeds both the band_pairs merge and scoring
-    # sentinel row per touched band: merge_bucketed's anti-join drops ALL
-    # old rows of every touched band even when its recomputed pair set is
-    # empty (hot-crossing withdraws the band's prior contribution)
-    sentinels = touched.select(
-        "band", F.lit(None).cast("string").alias("a"),
-        F.lit(None).cast("string").alias("b"),
-    )
-    catalog.merge_bucketed(
-        spark, prs, pairs.unionByName(sentinels),
-        ["band", "a", "b"], "band", n_buckets=LINK_STATE_BUCKETS,
-        anti_cols=["band"],
-    )
+        new_members = sigs.select(F.explode("bands").alias("band"), "norm")
+        members_commit = submit(
+            catalog.merge_bucketed, spark, mem, new_members,
+            ["band", "norm"], "band", n_buckets=n_buckets,
+        )
 
-    # 3) verify only never-scored pairs (scores deterministic in (a, b))
-    cand = pairs.select("a", "b").distinct()
-    if catalog.exists(scr):
-        seen = catalog.read(spark, scr).select("a", "b")
-        cand = cand.join(seen, ["a", "b"], "left_anti")
-    fresh_scores = score_pairs(cand)
-    catalog.merge_bucketed(
-        spark, scr, fresh_scores, ["a", "b"], "a",
-        n_buckets=LINK_STATE_BUCKETS,
-    )
+        # 2) recompute candidate pairs for exactly the bands a new surface
+        # touched, from CURRENT membership: a bucket-pruned read (band
+        # hashes to its bucket under the same modulus as the merge) + the
+        # same cap as the batch path
+        touched = new_members.select("band").distinct().localCheckpoint()
+        wanted = [
+            r[0] for r in touched.select(
+                catalog._bucket_expr("band", n_buckets).alias("b")
+            ).distinct().collect()
+        ]
+        # the pruned read trusts the manifest's bucket labels: wait for the
+        # members merge (which also migrates a foreign layout) to commit
+        members_commit.result()
+        members = catalog.read_buckets(spark, mem, wanted).join(
+            touched, "band", "left_semi"
+        ).localCheckpoint()  # feeds the cap agg and both self-join sides
+        hot = (
+            members.groupBy("band").agg(F.count("*").alias("n"))
+            .filter(F.col("n") > bucket_cap).select("band")
+        )
+        cool = members.join(F.broadcast(hot), "band", "left_anti")
+        l, r = cool.alias("l"), cool.alias("r")
+        pairs = (
+            l.join(r, F.col("l.band") == F.col("r.band"))
+            .filter(F.col("l.norm") < F.col("r.norm"))
+            .select(
+                F.col("l.band").alias("band"),
+                F.col("l.norm").alias("a"), F.col("r.norm").alias("b"),
+            )
+        ).localCheckpoint()  # feeds both the band_pairs merge and scoring
+        # sentinel row per touched band: merge_bucketed's anti-join drops
+        # ALL old rows of every touched band even when its recomputed pair
+        # set is empty (hot-crossing withdraws the band's prior
+        # contribution)
+        sentinels = touched.select(
+            "band", F.lit(None).cast("string").alias("a"),
+            F.lit(None).cast("string").alias("b"),
+        )
+        submit(
+            catalog.merge_bucketed, spark, prs, pairs.unionByName(sentinels),
+            ["band", "a", "b"], "band", n_buckets=n_buckets,
+            anti_cols=["band"],
+        )
+
+        # 3) verify only never-scored pairs (scores deterministic in (a, b))
+        cand = pairs.select("a", "b").distinct()
+        if catalog.exists(scr):
+            seen = catalog.read(spark, scr).select("a", "b")
+            cand = cand.join(seen, ["a", "b"], "left_anti")
+        submit(
+            catalog.merge_bucketed, spark, scr, score_pairs(cand),
+            ["a", "b"], "a", n_buckets=n_buckets,
+        )
     return current_links(
         spark, catalog, jaccard_threshold, cosine_threshold, prefix
     )

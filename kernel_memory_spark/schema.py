@@ -182,6 +182,24 @@ STEP_LEDGER = StructType(
     ]
 )
 
+
+def step_ledger_arrow_schema():
+    """Arrow schema of the ledger files the driver writes directly
+    (sources/tables.append_rows_local): STEP_LEDGER's columns, every field
+    nullable and `committed_at` a zone-less microsecond timestamp, as
+    ledger files have always been written."""
+    import pyarrow as pa
+
+    return pa.schema(
+        [
+            ("step", pa.string()), ("execution_id", pa.string()),
+            ("bucket", pa.int32()), ("rows_in", pa.int64()),
+            ("rows_out", pa.int64()), ("wall_ms", pa.int64()),
+            ("committed_at", pa.timestamp("us")),
+        ]
+    )
+
+
 # Reserved tag / payload names (Constants.cs:119-137).
 TAG_DOCUMENT_ID = "__document_id"
 TAG_FILE_ID = "__file_id"

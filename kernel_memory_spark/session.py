@@ -71,8 +71,9 @@ def _prewarm_python_workers(spark) -> None:
     operator happens to run Python first. Workers are reused
     (spark.python.worker.reuse default), so this is per-session setup cost
     moved out of the first query — no data is touched, nothing is cached.
-    Disable with SPARK_GRAFT_PREWARM=0."""
-    key = id(spark)
+    Disable with SPARK_GRAFT_PREWARM=0. Keyed on the application id, not
+    id(spark): an object id can be reused after a session is stopped."""
+    key = spark.sparkContext.applicationId
     if key in _PREWARMED:
         return
     _PREWARMED.add(key)

@@ -26,9 +26,13 @@ import json
 import os
 import shutil
 import uuid
+from contextlib import contextmanager
 from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+# name prefix of concurrent_commits' worker threads
+COMMIT_THREAD_PREFIX = "kms-commit"
 
 
 class TableCatalog:
@@ -700,6 +704,42 @@ def commit_union(catalog: "TableCatalog", name: str, sources: List[str]) -> int:
             dirs.append(_os.path.relpath(abs_d, catalog._dir(name)))
     _os.makedirs(catalog._dir(name), exist_ok=True)
     return catalog._commit(name, dirs)
+
+
+@contextmanager
+def concurrent_commits(spark: SparkSession, n_commits: int):
+    """Run independent table commits on a bounded thread pool.
+
+    Yields `submit(fn, *args, **kwargs) -> Future`; call it as each
+    commit's input becomes ready. A commit pays a fixed per-job floor
+    (scheduling, codegen, file listing, manifest write) that leaves most
+    executor cores idle, so commits to DIFFERENT tables overlap that floor
+    instead of serializing it. The pool holds min(n_commits, executor
+    cores) threads. On exit, normal or exceptional, every submitted commit
+    is waited for before anything is raised, so no writer outlives the
+    block; then the block's own exception propagates, or else the first
+    failed commit's (in submission order).
+
+    Callers must not submit two commits to the same table: snapshot
+    commits are last-writer-wins."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    workers = max(1, min(n_commits, spark.sparkContext.defaultParallelism))
+    pool = ThreadPoolExecutor(max_workers=workers,
+                              thread_name_prefix=COMMIT_THREAD_PREFIX)
+    futures = []
+
+    def submit(fn, *args, **kwargs):
+        fut = pool.submit(fn, *args, **kwargs)
+        futures.append(fut)
+        return fut
+
+    try:
+        yield submit
+    finally:
+        pool.shutdown(wait=True)
+    for fut in futures:
+        fut.result()
 
 
 def append_rows_local(catalog: "TableCatalog", name: str, rows: List[dict],

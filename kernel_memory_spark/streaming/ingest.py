@@ -14,7 +14,10 @@ message is a document batch routed through the handler chain):
   own rows (the streaming analog of DeletePreviousRecordsAsync,
   SaveRecordsHandler.cs:297-323). Exactly-once per input file comes from
   the file source's checkpoint tracking; a batch that crashes mid-merge
-  re-runs safely because every merge is a snapshot commit (Q3).
+  re-runs safely because every merge is a snapshot commit (Q3). The merges
+  of one batch target different tables, so they run concurrently
+  (sources/tables.concurrent_commits), each submitted as soon as its stage
+  output exists; the batch's ledger row commits after all of them.
 - `refresh_graph` — the GLOBAL stages (entity linking, canonicalization,
   node/edge materialize) are cross-document by nature; re-resolving the
   whole graph inside every micro-batch is neither feasible at 10^12 docs
@@ -23,8 +26,10 @@ message is a document batch routed through the handler chain):
   streaming upsert, periodic global refine.
 
 At 100TB: each micro-batch's work is O(batch) (bucket-scoped merges; the
-bucket count is sized to the cluster), and refresh_graph is O(accumulated
-mentions) — schedulable off-peak, exactly like Iceberg table maintenance.
+bucket count, PipelineConfig.records_buckets, is sized to the cluster and
+also buckets the incremental link state of refresh_graph_incremental), and
+refresh_graph is O(accumulated mentions) — schedulable off-peak, exactly
+like Iceberg table maintenance.
 """
 
 from __future__ import annotations
@@ -48,7 +53,9 @@ from kernel_memory_spark.operators import (
 )
 from kernel_memory_spark.sources import tables
 from kernel_memory_spark.sources.tables import TableCatalog
-from kernel_memory_spark.streaming.pipeline import LEDGER, PipelineConfig
+from kernel_memory_spark.streaming.pipeline import (
+    LEDGER, PipelineConfig, materialize_graph,
+)
 
 # input files: (doc_id, spans, tags) — CORPUS plus the per-doc tag map
 INGEST_SCHEMA = StructType(
@@ -76,7 +83,12 @@ def ingest_batch(
     execution_id: str,
 ) -> dict:
     """Run the per-document stages for one micro-batch and merge into the
-    shared tables. Idempotent per (execution_id, batch content)."""
+    shared tables. Idempotent per (execution_id, batch content).
+
+    The UDF chain runs on the calling thread; each stage's merge is a
+    commit to its own table, submitted as soon as its input exists, so the
+    merges overlap each other and the rest of the chain. The ledger row
+    commits only after every merge has joined."""
     t0 = time.time()
     nb = cfg.records_buckets
     # ledger doc count rides the FIRST merge's job via observe() — a
@@ -94,80 +106,82 @@ def ingest_batch(
         if "tags" in batch_df.columns else None
     )
 
-    _merge_doc_scoped(catalog, spark, "corpus", corpus, nb)
-    if tags is not None:
-        clean_tags, fatal = qtn.split_fatal_rows(
-            tags, qtn.invalid_tag_keys_condition()
+    # the doc-scoped merges, the quarantine write and the co-occurrence fold
+    n_commits = len(_STREAM_TABLES) + 1 + bool(cfg.cooccur_index)
+    with tables.concurrent_commits(spark, n_commits) as submit:
+        submit(_merge_doc_scoped, catalog, spark, "corpus", corpus, nb)
+        if tags is not None:
+            clean_tags, fatal = qtn.split_fatal_rows(
+                tags, qtn.invalid_tag_keys_condition()
+            )
+            submit(_quarantine, catalog, qtn.quarantine_rows(
+                fatal, "save_records", execution_id, "invalid_tag_key",
+                detail=qtn.invalid_tag_keys_detail(),
+            ))
+            submit(_merge_doc_scoped, catalog, spark, "doc_tags", tags, nb)
+        else:
+            clean_tags = None
+
+        # localCheckpoint: each stage feeds BOTH its merge and the next
+        # stage — truncate lineage so the UDF chain executes once per
+        # stage, not once per downstream consumer
+        extracted = ext.extract(corpus).localCheckpoint()
+        submit(_merge_doc_scoped, catalog, spark, "extracted", extracted, nb)
+
+        parts = prt.partition(
+            extracted, cfg.max_tokens, cfg.overlap, cfg.tokenizer
+        ).localCheckpoint()
+        submit(_merge_doc_scoped, catalog, spark, "partitions", parts, nb)
+
+        # dedupe=False for the same reason as the batch pipeline: the
+        # hermetic hash embedder recomputes a duplicate chunk's vector
+        # cheaper than the distinct+join-back shuffle; flip on for
+        # remote-model generators
+        vecs = emb.gen_embeddings(
+            parts, cfg.embedding_dim, dedupe=False
+        ).localCheckpoint()
+        submit(_merge_doc_scoped, catalog, spark, "embeddings", vecs, nb)
+
+        records = sav.build_records(
+            prt.filter_artifact_types(parts), vecs, clean_tags, extracted,
+            execution_id, cfg.last_update,
         )
-        quarantined = qtn.quarantine_rows(
-            fatal, "save_records", execution_id, "invalid_tag_key",
-            detail=qtn.invalid_tag_keys_detail(),
-        )
-        if not quarantined.isEmpty():
-            qtn.write_quarantine(catalog, quarantined)
-        _merge_doc_scoped(catalog, spark, "doc_tags", tags, nb)
-    else:
-        clean_tags = None
-
-    # localCheckpoint: each stage feeds BOTH its merge and the next stage —
-    # truncate lineage so the UDF chain executes once per stage, not once
-    # per downstream consumer
-    extracted = ext.extract(corpus).localCheckpoint()
-    _merge_doc_scoped(catalog, spark, "extracted", extracted, nb)
-
-    parts = prt.partition(
-        extracted, cfg.max_tokens, cfg.overlap, cfg.tokenizer
-    ).localCheckpoint()
-    _merge_doc_scoped(catalog, spark, "partitions", parts, nb)
-
-    # dedupe=False for the same reason as the batch pipeline: the hermetic
-    # hash embedder recomputes a duplicate chunk's vector cheaper than the
-    # distinct+join-back shuffle; flip on for remote-model generators
-    vecs = emb.gen_embeddings(
-        parts, cfg.embedding_dim, dedupe=False
-    ).localCheckpoint()
-    _merge_doc_scoped(catalog, spark, "embeddings", vecs, nb)
-
-    records = sav.build_records(
-        prt.filter_artifact_types(parts), vecs, clean_tags, extracted,
-        execution_id, cfg.last_update,
-    )
-    catalog.merge_bucketed(
-        spark, "records", records, ["id"], bucket_col="doc_id",
-        n_buckets=nb, anti_cols=["doc_id"],
-    )
-
-    extractions = tri.extract_all_df(parts).localCheckpoint()
-    _merge_doc_scoped(catalog, spark, "extractions", extractions, nb)
-
-    if cfg.cooccur_index:
-        # fold this batch's co-mentions into the incremental PMI index:
-        # basket = document, item = normalized mention surface;
-        # replace=True keeps the index idempotent under doc re-delivery
-        # (the same contract as every doc-scoped merge above)
-        from kernel_memory_spark.operators import cooccur as co
-
-        co.upsert_cooccur_index(
-            spark, catalog, cfg.cooccur_index,
-            tri.mentions_from_extractions(extractions).select(
-                "doc_id", "norm"
-            ),
-            "doc_id", "norm", n_buckets=nb, replace=True,
+        submit(
+            catalog.merge_bucketed, spark, "records", records, ["id"],
+            bucket_col="doc_id", n_buckets=nb, anti_cols=["doc_id"],
         )
 
-    # raw tags here, not clean_tags: the batch pipeline derives tag triples
-    # from the stored doc_tags table (pipeline.py triples step), quarantine
-    # only strips user tags from RECORDS — keep the two paths identical
-    lineage = tri.lineage_triples(parts, extracted, tags, execution_id)
-    mentions = tri.mentions_from_extractions(extractions)
-    batch_triples = lineage.unionByName(
-        tri.mention_triples(mentions, execution_id)
-    )
-    _merge_doc_scoped(catalog, spark, "triples_base", batch_triples, nb)
+        extractions = tri.extract_all_df(parts).localCheckpoint()
+        submit(_merge_doc_scoped, catalog, spark, "extractions",
+               extractions, nb)
+        mentions = tri.mentions_from_extractions(extractions)
+
+        if cfg.cooccur_index:
+            # fold this batch's co-mentions into the incremental PMI index:
+            # basket = document, item = normalized mention surface;
+            # replace=True keeps the index idempotent under doc re-delivery
+            # (the same contract as every doc-scoped merge above)
+            from kernel_memory_spark.operators import cooccur as co
+
+            submit(
+                co.upsert_cooccur_index, spark, catalog, cfg.cooccur_index,
+                mentions.select("doc_id", "norm"), "doc_id", "norm",
+                n_buckets=nb, replace=True,
+            )
+
+        # raw tags here, not clean_tags: the batch pipeline derives tag
+        # triples from the stored doc_tags table (pipeline.py triples
+        # step), quarantine only strips user tags from RECORDS — keep the
+        # two paths identical
+        lineage = tri.lineage_triples(parts, extracted, tags, execution_id)
+        batch_triples = lineage.unionByName(
+            tri.mention_triples(mentions, execution_id)
+        )
+        submit(_merge_doc_scoped, catalog, spark, "triples_base",
+               batch_triples, nb)
 
     wall_ms = int((time.time() - t0) * 1000)
-    # collected during the corpus merge (the first action over the observe
-    # node); no extra job
+    # collected during the first action over the observe node; no extra job
     n_docs = int(obs.get["n_docs"])
     _commit_stream_ledger(catalog, execution_id, n_docs, wall_ms)
     compacted = (
@@ -175,6 +189,11 @@ def ingest_batch(
         if cfg.compact_threshold else []
     )
     return {"n_docs": n_docs, "wall_ms": wall_ms, "compacted": compacted}
+
+
+def _quarantine(catalog: TableCatalog, quarantined: DataFrame) -> None:
+    if not quarantined.isEmpty():
+        qtn.write_quarantine(catalog, quarantined)
 
 
 # the doc-scoped merge targets of ingest_batch — the tables whose bucket
@@ -194,17 +213,25 @@ def _maybe_compact(spark: SparkSession, catalog: TableCatalog,
     bucket, and the co-occurrence index additionally drops its zero-count
     tombstones. The trigger check is a driver-side manifest scan — free —
     so running it every batch is safe; the rewrite itself amortizes to
-    O(table/threshold) per batch. Returns the tables compacted."""
-    done = []
-    for name in _STREAM_TABLES:
-        if catalog.auto_compact(spark, name, cfg.compact_threshold):
-            done.append(name)
-    if cfg.cooccur_index:
-        from kernel_memory_spark.operators import cooccur as co
+    O(table/threshold) per batch. Tables are compacted concurrently (one
+    commit each). Returns the tables compacted."""
+    n_commits = len(_STREAM_TABLES) + bool(cfg.cooccur_index)
+    with tables.concurrent_commits(spark, n_commits) as submit:
+        compacts = {
+            name: submit(catalog.auto_compact, spark, name,
+                         cfg.compact_threshold)
+            for name in _STREAM_TABLES
+        }
+        if cfg.cooccur_index:
+            from kernel_memory_spark.operators import cooccur as co
 
-        done += co.compact_cooccur_index(
-            spark, catalog, cfg.cooccur_index, cfg.compact_threshold
-        )
+            cooccur = submit(
+                co.compact_cooccur_index, spark, catalog,
+                cfg.cooccur_index, cfg.compact_threshold,
+            )
+    done = [name for name, fut in compacts.items() if fut.result()]
+    if cfg.cooccur_index:
+        done += cooccur.result()
     return done
 
 
@@ -212,17 +239,7 @@ def _commit_stream_ledger(catalog: TableCatalog, execution_id: str,
                           n_docs: int, wall_ms: int) -> None:
     import datetime
 
-    import pyarrow as pa
-
     now = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
-    arrow_schema = pa.schema(
-        [
-            ("step", pa.string()), ("execution_id", pa.string()),
-            ("bucket", pa.int32()), ("rows_in", pa.int64()),
-            ("rows_out", pa.int64()), ("wall_ms", pa.int64()),
-            ("committed_at", pa.timestamp("us")),
-        ]
-    )
     tables.append_rows_local(
         catalog, LEDGER,
         [{
@@ -230,7 +247,7 @@ def _commit_stream_ledger(catalog: TableCatalog, execution_id: str,
             "bucket": 0, "rows_in": int(n_docs), "rows_out": int(n_docs),
             "wall_ms": int(wall_ms), "committed_at": now,
         }],
-        arrow_schema,
+        S.step_ledger_arrow_schema(),
     )
 
 
@@ -315,8 +332,8 @@ def refresh_graph_incremental(
     extractions = catalog.read(spark, "extractions")
     mentions = tri.mentions_from_extractions(extractions).localCheckpoint()
     alias_edges = lnk.refresh_links_incremental(
-        spark, catalog, mentions, cfg.jaccard_threshold,
-        cfg.cosine_threshold,
+        spark, catalog, mentions, cfg.records_buckets,
+        cfg.jaccard_threshold, cfg.cosine_threshold,
     )
     catalog.overwrite(alias_edges, "alias_edges")
     return _refine_graph(spark, catalog, extractions, mentions,
@@ -332,19 +349,11 @@ def _refine_graph(
     t0: float,
 ) -> dict:
     """Shared tail of both refresh flavors: canonical entity map ->
-    canonical triples -> nodes/edges -> zero-copy `triples` union."""
+    canonical triples + nodes -> zero-copy `triples` union -> edges (the
+    batch pipeline's canonicalize + materialize)."""
     emap = czn.entity_map(mentions, catalog.read(spark, "alias_edges"))
     catalog.overwrite(emap, "entity_map")
-    emap = catalog.read(spark, "entity_map")
-
-    canonical = tri.entity_triples(
-        tri.patterns_from_extractions(extractions), emap, execution_id
-    )
-    catalog.overwrite(canonical, "triples_canonical")
-    catalog.overwrite(czn.materialize_nodes(mentions, emap), "nodes")
-    tables.commit_union(
-        catalog, "triples", ["triples_base", "triples_canonical"]
-    )
-    edges = czn.materialize_edges(catalog.read(spark, "triples_canonical"))
+    edges = materialize_graph(spark, catalog, extractions, mentions,
+                              execution_id)
     catalog.overwrite(edges, "edges")
     return {"wall_ms": int((time.time() - t0) * 1000)}

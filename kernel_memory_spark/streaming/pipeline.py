@@ -56,9 +56,11 @@ class PipelineConfig:
     cosine_threshold: float = lnk.COSINE_THRESHOLD
     last_update: str = "1970-01-01T00:00:00"
     per_bucket_metrics: bool = True
-    # records-table hash buckets (doc_id): merge rewrites only touched ones.
-    # Also the write parallelism of the records commit — keep >= the
-    # executor-core count (at real scale: thousands).
+    # hash-bucket count of every bucketed stream table: the doc_id-keyed
+    # records and micro-batch merge targets, and the incremental link
+    # state (operators/linking.refresh_links_incremental). A merge rewrites
+    # only touched buckets. Also the write parallelism of each bucketed
+    # commit — keep >= the executor-core count (at real scale: thousands).
     records_buckets: int = 32
     steps: List[str] = field(default_factory=lambda: list(S.KG_STEPS))
     # streaming only: when set, every micro-batch also folds its docs'
@@ -147,8 +149,6 @@ class Pipeline:
                      wall_ms: int, buckets: Optional[List[tuple]] = None) -> None:
         import datetime
 
-        import pyarrow as pa
-
         now = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
         rows = [
             {
@@ -158,18 +158,11 @@ class Pipeline:
             }
             for b, n_in, n_out in (buckets or [(0, rows_in, rows_out)])
         ]
-        arrow_schema = pa.schema(
-            [
-                ("step", pa.string()), ("execution_id", pa.string()),
-                ("bucket", pa.int32()), ("rows_in", pa.int64()),
-                ("rows_out", pa.int64()), ("wall_ms", pa.int64()),
-                ("committed_at", pa.timestamp("us")),
-            ]
-        )
         # ledger rows are driver-side metadata: written with pyarrow directly,
         # not a Spark job (9 stages x 1 job of pure scheduling otherwise)
         with self._commit_lock:
-            tables.append_rows_local(self.catalog, LEDGER, rows, arrow_schema)
+            tables.append_rows_local(self.catalog, LEDGER, rows,
+                                     S.step_ledger_arrow_schema())
         self.metrics[step] = {
             "rows_in": rows_in, "rows_out": rows_out, "wall_ms": wall_ms,
         }
@@ -213,17 +206,12 @@ class Pipeline:
             if corpus is None:
                 raise ValueError("corpus required for a fresh run")
             t0 = time.time()
-            if doc_tags is not None:
-                # independent writes -> concurrent jobs (overlap the per-job
-                # scheduling floor, same as the materialize stage)
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    f1 = pool.submit(cat.overwrite, corpus, "corpus")
-                    f2 = pool.submit(cat.overwrite, doc_tags, "doc_tags")
-                    f1.result(), f2.result()
-            else:
-                cat.overwrite(corpus, "corpus")
+            # independent writes -> concurrent jobs (overlap the per-job
+            # scheduling floor, same as the materialize stage)
+            with tables.concurrent_commits(spark, 2) as submit:
+                submit(cat.overwrite, corpus, "corpus")
+                if doc_tags is not None:
+                    submit(cat.overwrite, doc_tags, "doc_tags")
             self._commit_step("ingest", 0,
                               tables.table_row_count(cat, "corpus"),
                               int((time.time() - t0) * 1000))
@@ -435,32 +423,14 @@ class Pipeline:
             triples_pool.shutdown()
 
         if "materialize" not in done:
-            def _materialize():
-                from concurrent.futures import ThreadPoolExecutor
-
-                emap = cat.read(spark, "entity_map")
-                canonical = tri.entity_triples(
-                    tri.patterns_from_extractions(cat.read(spark, "extractions")),
-                    emap, cfg.execution_id,
-                )
-                nodes = czn.materialize_nodes(_mentions(), emap)
-                # canonical-triples and nodes are independent jobs: submit
-                # them concurrently so the per-job scheduling/codegen floor
-                # overlaps instead of serializing (a real cluster's FAIR
-                # scheduler does the same; shaves one job's latency from the
-                # stage's serial floor)
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    f1 = pool.submit(cat.overwrite, canonical, "triples_canonical")
-                    f2 = pool.submit(cat.overwrite, nodes, "nodes")
-                    f1.result(), f2.result()
-                # zero-copy union: `triples` snapshot points at the base +
-                # canonical data files, nothing is rewritten
-                tables.commit_union(
-                    self.catalog, "triples", ["triples_base", "triples_canonical"]
-                )
-                return czn.materialize_edges(cat.read(spark, "triples_canonical"))
-
-            self._run_step("materialize", _materialize, "edges")
+            self._run_step(
+                "materialize",
+                lambda: materialize_graph(
+                    spark, cat, cat.read(spark, "extractions"), _mentions(),
+                    cfg.execution_id,
+                ),
+                "edges",
+            )
         if crashed("materialize"):
             return self.metrics
 
@@ -502,5 +472,27 @@ class Pipeline:
         return self.metrics
 
 
-def read_triples(spark: SparkSession, catalog: TableCatalog) -> DataFrame:
-    return catalog.read(spark, "triples")
+def materialize_graph(spark: SparkSession, catalog: TableCatalog,
+                      extractions: DataFrame, mentions: DataFrame,
+                      execution_id: str) -> DataFrame:
+    """The materialize stage over the committed `entity_map`: commits
+    `triples_canonical` and `nodes`, then the zero-copy `triples` union,
+    and returns the (uncommitted) edges frame. Shared by Pipeline.run and
+    the streaming refresh, so both produce the same tables."""
+    emap = catalog.read(spark, "entity_map")
+    canonical = tri.entity_triples(
+        tri.patterns_from_extractions(extractions), emap, execution_id
+    )
+    nodes = czn.materialize_nodes(mentions, emap)
+    # canonical-triples and nodes are independent jobs: commit them
+    # concurrently so the per-job scheduling/codegen floor overlaps instead
+    # of serializing (a real cluster's FAIR scheduler does the same)
+    with tables.concurrent_commits(spark, 2) as submit:
+        submit(catalog.overwrite, canonical, "triples_canonical")
+        submit(catalog.overwrite, nodes, "nodes")
+    # zero-copy union: `triples` snapshot points at the base + canonical
+    # data files, nothing is rewritten
+    tables.commit_union(
+        catalog, "triples", ["triples_base", "triples_canonical"]
+    )
+    return czn.materialize_edges(catalog.read(spark, "triples_canonical"))

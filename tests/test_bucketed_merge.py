@@ -2,10 +2,17 @@
 rewrite; untouched buckets carry into the new snapshot by reference."""
 
 import os
+import threading
+import time
+from types import SimpleNamespace
+
+import pytest
 
 from pyspark.sql import functions as F
 
-from kernel_memory_spark.sources.tables import TableCatalog
+from kernel_memory_spark.sources.tables import (
+    COMMIT_THREAD_PREFIX, TableCatalog, concurrent_commits,
+)
 
 
 def rows(spark, pairs):
@@ -178,3 +185,65 @@ class TestNullBucketKey:
             ["id"], "doc_id", n_buckets=4,
         )
         assert cat.read(spark, "t").count() == 3
+
+
+class TestConcurrentCommits:
+    @staticmethod
+    def _stub_spark(cores):
+        return SimpleNamespace(
+            sparkContext=SimpleNamespace(defaultParallelism=cores)
+        )
+
+    def test_waits_for_every_commit_then_raises_first_failure(self):
+        finished = []
+
+        def slow(tag):
+            time.sleep(0.3)
+            finished.append(tag)
+
+        def fail(msg):
+            raise ValueError(msg)
+
+        with pytest.raises(ValueError, match="first"):
+            with concurrent_commits(self._stub_spark(2), 4) as submit:
+                submit(slow, "a")
+                submit(fail, "first")
+                submit(fail, "second")
+                submit(slow, "b")
+        assert sorted(finished) == ["a", "b"]
+
+    def test_block_failure_still_joins_submitted_commits(self):
+        finished = []
+
+        def slow():
+            time.sleep(0.3)
+            finished.append(1)
+
+        with pytest.raises(KeyError):
+            with concurrent_commits(self._stub_spark(4), 2) as submit:
+                submit(slow)
+                raise KeyError("caller failed")
+        assert finished == [1]
+        assert not [
+            t for t in threading.enumerate()
+            if t.name.startswith(COMMIT_THREAD_PREFIX)
+        ]
+
+    def test_pool_bounded_by_commits_and_cores(self):
+        live, peak = [0], [0]
+        lock = threading.Lock()
+
+        def commit():
+            with lock:
+                live[0] += 1
+                peak[0] = max(peak[0], live[0])
+            time.sleep(0.1)
+            with lock:
+                live[0] -= 1
+
+        for cores, n, want in ((2, 6, 2), (8, 3, 3)):
+            peak[0] = 0
+            with concurrent_commits(self._stub_spark(cores), n) as submit:
+                for _ in range(n):
+                    submit(commit)
+            assert peak[0] == want

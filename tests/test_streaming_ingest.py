@@ -11,12 +11,18 @@ same corpus.
 import glob
 import os
 import shutil
+import threading
+import time
 
 import pytest
 
 from pyspark.sql import functions as F
 
-from kernel_memory_spark.sources.tables import TableCatalog
+from kernel_memory_spark.operators import linking as lnk
+from kernel_memory_spark.operators import triples as tri
+from kernel_memory_spark.sources.tables import (
+    COMMIT_THREAD_PREFIX, TableCatalog,
+)
 from kernel_memory_spark.streaming import ingest as si
 from kernel_memory_spark.streaming.pipeline import Pipeline, PipelineConfig
 from kernel_memory_spark.synth import synth_full
@@ -241,6 +247,78 @@ class TestIncrementalRefresh:
             (r.a, r.b) for r in scat.read(spark, "alias_edges").collect()
         }
         assert edges_v1 == edges_v2
+
+
+    def test_link_state_rebucketing_matches_full_link(
+        self, spark, tmp_path, batches
+    ):
+        """The link state is bucketed by records_buckets. Changing that
+        count between refreshes migrates the state (merge_bucketed's
+        one-time layout rewrite), and the bucket-pruned band read must use
+        the new modulus: the refreshed alias edges still equal a full
+        link_entities over every mention."""
+        _full, first, second = batches
+        cat = TableCatalog(str(tmp_path / "cat"))
+        for i, (df, nb) in enumerate(((first, 8), (second, 3))):
+            cfg = PipelineConfig(records_buckets=nb)
+            si.ingest_batch(spark, cat, df, cfg, f"e-{i}")
+            si.refresh_graph_incremental(spark, cat, cfg)
+        for t in ("surfaces", "band_members", "band_pairs", "edge_scores"):
+            assert cat._manifest(f"link_{t}")["bucketing"]["n"] == 3, t
+
+        def edges(df):
+            return {
+                (r.a, r.b, r.jaccard, r.cosine)
+                for r in df.select("a", "b", "jaccard", "cosine").collect()
+            }
+
+        mentions = tri.mentions_from_extractions(
+            cat.read(spark, "extractions")
+        )
+        want = edges(lnk.link_entities(mentions))
+        assert want
+        assert edges(cat.read(spark, "alias_edges")) == want
+
+
+class TestConcurrentCommits:
+    def test_failed_merge_leaves_nothing_running(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """One merge of a micro-batch fails while the others are in
+        flight: ingest_batch raises that error only after every submitted
+        merge has finished, so no commit thread survives the call and no
+        table moves afterwards; the ledger row is never written."""
+        batch = synth_full(spark, 4).select("doc_id", "spans", "tags")
+        cat = TableCatalog(str(tmp_path / "cat"))
+        merge = cat.merge_bucketed
+
+        def failing_merge(spark_, name, *args, **kwargs):
+            if name == "extracted":
+                raise RuntimeError("injected merge failure")
+            return merge(spark_, name, *args, **kwargs)
+
+        monkeypatch.setattr(cat, "merge_bucketed", failing_merge)
+        with pytest.raises(RuntimeError, match="injected merge failure"):
+            si.ingest_batch(spark, cat, batch,
+                            PipelineConfig(records_buckets=4), "e-fail")
+
+        assert not [
+            t.name for t in threading.enumerate()
+            if t.name.startswith(COMMIT_THREAD_PREFIX)
+        ]
+
+        def latest():
+            return {
+                p: open(p).read()
+                for p in glob.glob(os.path.join(cat.root, "*", "_LATEST"))
+            }
+
+        after_call = latest()
+        time.sleep(2)
+        assert latest() == after_call
+        # the merges submitted after the failure still ran to completion
+        assert cat.exists("triples_base")
+        assert not cat.exists("step_ledger")
 
 
 class TestStreamingCooccurIndex:
